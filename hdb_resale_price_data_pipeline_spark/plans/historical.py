@@ -27,27 +27,30 @@ SQM_TO_SQFT = 3.28084 * 3.28084
 def conform_historical(df: DataFrame) -> DataFrame:
     """Casing, renames, unit conversion, date derivations
     (historical_data_transformation.py:29-54)."""
-    df = (
-        df.withColumn("general_location", F.initcap(col("town")))
-        .withColumn("street_name", F.initcap(col("street_name")))
-        .withColumn("property_type", F.initcap(col("flat_type")))
-        .withColumnRenamed("flat_model", "model")
-        .withColumnRenamed("resale_price", "price")
-        .withColumnRenamed("lease_commence_date", "top")
-        # '4 Room' → '4 Rooms'; 'Multi Generation' → 'Multi-generation'
-        .withColumn("property_type", F.regexp_replace(col("property_type"), "Room", "Rooms"))
-        .withColumn("property_type", F.regexp_replace(col("property_type"), "Multi G", "Multi-g"))
-        .withColumn(
-            "total_floor_area", F.round(col("floor_area_sqm") * SQM_TO_SQFT).cast("int")
-        )
-        .withColumn("date_of_sale", month_string_to_date(col("month")))
-        .withColumn("year", F.year("date_of_sale"))
-        .withColumn("month", F.month("date_of_sale"))
-        .withColumn(
-            "remaining_lease", LEASE_YEARS - (col("year") - col("top")).cast("int")
-        )
+    df = df.withColumnsRenamed(
+        {"flat_model": "model", "resale_price": "price", "lease_commence_date": "top"}
+    ).withColumns(
+        {
+            "general_location": F.initcap(col("town")),
+            "street_name": F.initcap(col("street_name")),
+            # '4 Room' → '4 Rooms'; 'Multi Generation' → 'Multi-generation'
+            "property_type": F.regexp_replace(
+                F.regexp_replace(F.initcap(col("flat_type")), "Room", "Rooms"),
+                "Multi G",
+                "Multi-g",
+            ),
+            "total_floor_area": F.round(col("floor_area_sqm") * SQM_TO_SQFT).cast("int"),
+            "date_of_sale": month_string_to_date(col("month")),
+        }
     )
-    return df
+    return df.withColumns(
+        {
+            "year": F.year("date_of_sale"),
+            "month": F.month("date_of_sale"),
+            "remaining_lease": LEASE_YEARS
+            - (F.year("date_of_sale") - col("top")).cast("int"),
+        }
+    )
 
 
 def enrich_districts(
@@ -67,10 +70,10 @@ def enrich_districts(
         town_district.withColumn("general_location", F.lower("general_location")),
         on="general_location",
     )
-    df = (
-        df.withColumn("general_location", F.initcap("general_location"))
-        # initcap lower-cases the letter after '/' — restore 'Kallang/Whampoa'
-        .withColumn("general_location", F.regexp_replace("general_location", r"/w", "/W"))
+    # initcap lower-cases the letter after '/' — restore 'Kallang/Whampoa'
+    df = df.withColumn(
+        "general_location",
+        F.regexp_replace(F.initcap("general_location"), r"/w", "/W"),
     )
     df = enrich(df, district_code, on="district", dim_project=["district", "zone"], dim_distinct=True)
     df = enrich(df, district_region, on="district")
@@ -86,7 +89,7 @@ def historical_pipeline(
     """Full pipeline: conform → enrich → type → canonical 17 columns."""
     df = conform_historical(raw)
     df = enrich_districts(df, town_district, district_code, district_region)
-    df = df.drop("town", "flat_type")
-    for c in ("district", "floor_area_sqm", "top", "price"):
-        df = df.withColumn(c, col(c).cast("int"))
-    return df.select(HISTORICAL_COLUMNS)
+    ints = {"district", "floor_area_sqm", "top", "price"}
+    return df.select(
+        [col(c).cast("int").alias(c) if c in ints else col(c) for c in HISTORICAL_COLUMNS]
+    )

@@ -36,5 +36,6 @@ def merge_dedup_pipeline(
     df = least_nulls_survivor(
         df, partition_cols=["location", "price"], tiebreakers=["url"]
     )
-    df = df.withColumn("transformed_date", F.lit(as_of))
-    return df.select(LISTING_COLUMNS)
+    return df.select(
+        [F.lit(as_of).alias(c) if c == "transformed_date" else col(c) for c in LISTING_COLUMNS]
+    )

@@ -47,70 +47,54 @@ _DROP_COLS = [
 
 
 def conform_propnex(df: DataFrame, as_of_year: int) -> DataFrame:
-    """Per-column cleanups (propnex_transformation.py:13-99) as one
-    chained map stage."""
-    df = (
-        df.withColumn("agent_email", F.lower(col("agent_email")))
-        .withColumn("agent_id", F.substring_index(col("agent_id"), "#", -1))
-        .withColumn(
-            "agent_phone_num", F.substring_index(col("agent_phone_num"), " ", -1).cast("int")
-        )
-        .withColumn("description", strip_emoji_and_newlines(col("description")))
-        .withColumn(
-            "floor_area_sqm",
-            F.regexp_extract(col("floor_area_sqft"), r"\((\d+)\s*sqm\)", 1),
-        )
-        .withColumn("price", money_to_int(col("price")))
-        .withColumn("price_psf", F.round(col("price") / col("total_floor_area")).cast("int"))
-        .withColumn("furnish", furnishing_category(col("furnishing"), "unfurnished"))
-        # 'street\ntown (D16)' → town; a bare '(D16)' second line means the
-        # town was missing → NULL
-        .withColumn(
-            "general_location",
-            F.split(F.split(col("street_town_district"), "\\n").getItem(1), " \\(").getItem(0),
-        )
-        .withColumn(
-            "general_location",
-            F.when(col("general_location").startswith("(D"), None).otherwise(
+    """Per-column cleanups (propnex_transformation.py:13-99) as two
+    ``withColumns`` steps: the second reads what the first rewrote."""
+    df = df.withColumns(
+        {
+            "agent_email": F.lower(col("agent_email")),
+            "agent_id": F.substring_index(col("agent_id"), "#", -1),
+            "agent_phone_num": F.substring_index(col("agent_phone_num"), " ", -1).cast("int"),
+            "description": strip_emoji_and_newlines(col("description")),
+            "floor_area_sqm": F.regexp_extract(col("floor_area_sqft"), r"\((\d+)\s*sqm\)", 1),
+            "price": money_to_int(col("price")),
+            "furnish": furnishing_category(col("furnishing"), "unfurnished"),
+            # 'street\ntown (D16)' → town
+            "general_location": F.split(
+                F.split(col("street_town_district"), "\\n").getItem(1), " \\("
+            ).getItem(0),
+            "facilities_num": facilities_count(col("facilities")),
+            "location": title_case_location(col("location")),
+            "district": F.substring_index(col("district"), "D", -1).cast("int"),
+            "floor": F.lower(F.split(col("floor"), " ").getItem(0)),
+        }
+    )
+    # agency derived from the agent email domain (propnex has no
+    # scraped agency column, propnex_transformation.py:65-69)
+    is_propnex = col("agent_email").contains("propnex.com")
+    return df.withColumns(
+        {
+            "price_psf": F.round(col("price") / col("total_floor_area")).cast("int"),
+            # a bare '(D16)' second line means the town was missing → NULL
+            "general_location": F.when(col("general_location").startswith("(D"), None).otherwise(
                 col("general_location")
             ),
-        )
-        .withColumn("facilities_num", facilities_count(col("facilities")))
-        .withColumn("location", title_case_location(col("location")))
-        # a purely-numeric location (block number only) falls back to the
-        # street name (propnex_transformation.py:53-54)
-        .withColumn(
-            "location",
-            F.when(F.trim(col("location")).rlike(r"^\d+$"), F.initcap(col("street_name")))
-            .otherwise(col("location")),
-        )
-        .withColumn("district", F.substring_index(col("district"), "D", -1).cast("int"))
-        .withColumn("floor", F.lower(F.split(col("floor"), " ").getItem(0)))
-        .withColumn("street_name", F.initcap(col("street_name")))
-        # agency derived from the agent email domain (propnex has no
-        # scraped agency column, propnex_transformation.py:65-69)
-        .withColumn(
-            "agency",
-            F.when(col("agent_email").contains("propnex.com"), PROPNEX_AGENCY).otherwise(None),
-        )
-        .withColumn(
-            "agency_id",
-            F.when(col("agency") == PROPNEX_AGENCY, PROPNEX_AGENCY_ID).otherwise(None),
-        )
-        .withColumn(
-            "remaining_lease", LEASE_YEARS - (F.lit(as_of_year) - col("top")).cast("int")
-        )
-        .withColumn(
-            "additional_information",
-            pack_additional_info(
+            # a purely-numeric location (block number only) falls back to
+            # the street name (propnex_transformation.py:53-54)
+            "location": F.when(
+                F.trim(col("location")).rlike(r"^\d+$"), F.initcap(col("street_name"))
+            ).otherwise(col("location")),
+            "street_name": F.initcap(col("street_name")),
+            "agency": F.when(is_propnex, PROPNEX_AGENCY).otherwise(None),
+            "agency_id": F.when(is_propnex, PROPNEX_AGENCY_ID).otherwise(None),
+            "remaining_lease": LEASE_YEARS - (F.lit(as_of_year) - col("top")).cast("int"),
+            "additional_information": pack_additional_info(
                 agent_email=col("agent_email"),
                 facilities=col("facilities"),
                 description=col("description"),
             ),
-        )
-        .withColumn("postal_sector", postal_sector(col("post_code")))
+            "postal_sector": postal_sector(col("post_code")),
+        }
     )
-    return df
 
 
 def propnex_pipeline(
@@ -133,14 +117,13 @@ def propnex_pipeline(
     df = df.withColumn("district", col("district_new"))
     df = enrich(df, district_region, on="district")
     # propnex never scrapes these; conformed layout still carries them
-    df = df.withColumn("property_type", F.lit(None).cast("string")).withColumn(
-        "model", F.lit(None).cast("string")
+    df = (
+        df.withColumns(
+            {"property_type": F.lit(None).cast("string"), "model": F.lit(None).cast("string")}
+        )
+        .withColumnsRenamed({"num_bedroom": "bedrooms", "num_bathroom": "bathrooms"})
+        .drop(*_DROP_COLS)
     )
-    df = df.withColumnRenamed("num_bedroom", "bedrooms").withColumnRenamed(
-        "num_bathroom", "bathrooms"
-    )
-    df = df.drop(*_DROP_COLS)
     df = normalize_missing_strings(df)
-    for c in ("bathrooms", "bedrooms", "top", "total_floor_area", "floor_area_sqm"):
-        df = df.withColumn(c, col(c).cast("int"))
-    return df
+    ints = ("bathrooms", "bedrooms", "top", "total_floor_area", "floor_area_sqm")
+    return df.withColumns({c: col(c).cast("int") for c in ints})

@@ -60,46 +60,46 @@ _DROP_COLS = [
 
 def conform_srx(df: DataFrame, as_of_year: int, use_pandas_udf: bool = False) -> DataFrame:
     bedrooms_clean = clean_bedrooms_pandas_udf if use_pandas_udf else clean_bedrooms_expr
-    df = (
-        # 'CEA: R123456A / L3008022J' carries both licence numbers
-        df.withColumn("agency_id", F.regexp_extract(col("agent_id"), r"(L\d{7}[A-Z])", 1))
-        .withColumn("agent_id", F.regexp_extract(col("agent_id"), r"(R\d{6}[A-Z])", 1))
-        .withColumn("agent_phone_num", F.split(col("agent_phone_num"), ":").getItem(1).cast("int"))
-        .withColumn("agent_name", strip_non_ascii(col("agent_name")))
-        .withColumn("post_code", F.regexp_extract(col("address"), r"\((\d+)\)", 1))
-        .withColumn("location", F.split(col("address"), " \\(").getItem(0))
-        .withColumn("location", title_case_location(col("location")))
-        .withColumn("description", strip_emoji_and_newlines(col("description")))
-        .withColumn("facilities_num", facilities_count(col("facilities")))
-        .withColumn("furnish", furnishing_category(col("furnish"), "not furnished"))
-        .withColumn("price", money_to_int(col("price")))
-        .withColumn("price_psf", psf_to_int(col("psf")))
-        .withColumn("floor_area_sqm", F.trim(F.split(col("size"), "sqm").getItem(0)).cast("int"))
-        .withColumn("total_floor_area", F.round(col("floor_area_sqm") * SQM_TO_SQFT).cast("int"))
-        .withColumn("property_type", F.trim(F.split(col("property_type"), "HDB").getItem(1)))
-        .withColumn("floor", F.lower(col("floor_level")))
-        .withColumn("floor", F.when(col("floor") == "mid", "middle").otherwise(col("floor")))
-        .withColumnRenamed("built_year", "top")
-        .withColumnRenamed("property_name", "street_name")
-        .withColumn("street_name", F.initcap(col("street_name")))
-        .withColumnRenamed("hdb_town", "general_location")
-        .withColumn("bedrooms", bedrooms_clean(col("bedrooms")).cast("int"))
-        .withColumn(
-            "remaining_lease", LEASE_YEARS - (F.lit(as_of_year) - col("top")).cast("int")
-        )
-        .withColumn("postal_sector", postal_sector(col("post_code")))
-        .withColumn(
-            "additional_information",
-            pack_additional_info(
+    floor_area_sqm = F.trim(F.split(col("size"), "sqm").getItem(0)).cast("int")
+    floor = F.lower(col("floor_level"))
+    df = df.withColumnsRenamed(
+        {"built_year": "top", "property_name": "street_name", "hdb_town": "general_location"}
+    ).withColumns(
+        {
+            # 'CEA: R123456A / L3008022J' carries both licence numbers
+            "agency_id": F.regexp_extract(col("agent_id"), r"(L\d{7}[A-Z])", 1),
+            "agent_id": F.regexp_extract(col("agent_id"), r"(R\d{6}[A-Z])", 1),
+            "agent_phone_num": F.split(col("agent_phone_num"), ":").getItem(1).cast("int"),
+            "agent_name": strip_non_ascii(col("agent_name")),
+            "post_code": F.regexp_extract(col("address"), r"\((\d+)\)", 1),
+            "location": F.split(col("address"), " \\(").getItem(0),
+            "description": strip_emoji_and_newlines(col("description")),
+            "facilities_num": facilities_count(col("facilities")),
+            "furnish": furnishing_category(col("furnish"), "not furnished"),
+            "price": money_to_int(col("price")),
+            "price_psf": psf_to_int(col("psf")),
+            "floor_area_sqm": floor_area_sqm,
+            "total_floor_area": F.round(floor_area_sqm * SQM_TO_SQFT).cast("int"),
+            "property_type": F.trim(F.split(col("property_type"), "HDB").getItem(1)),
+            "floor": F.when(floor == "mid", "middle").otherwise(floor),
+            "street_name": F.initcap(col("street_name")),
+            "bedrooms": bedrooms_clean(col("bedrooms")).cast("int"),
+            "remaining_lease": LEASE_YEARS - (F.lit(as_of_year) - col("top")).cast("int"),
+        }
+    )
+    return df.withColumns(
+        {
+            "location": title_case_location(col("location")),
+            "postal_sector": postal_sector(col("post_code")),
+            "additional_information": pack_additional_info(
                 facilities=col("facilities"),
                 schools=col("schools"),
                 **{"shopping_malls/markets": col("shopping_mall/markets")},
                 train_stations=col("train_stations"),
                 description=col("description"),
             ),
-        )
+        }
     )
-    return df
 
 
 def srx_pipeline(
@@ -116,8 +116,5 @@ def srx_pipeline(
     df = enrich(df, district_code, on="postal_sector")
     df = enrich(df, district_region, on="district")
     df = enrich(df, agency, on="agency_id")
-    df = df.drop(*_DROP_COLS)
-    df = normalize_missing_strings(df)
-    for c in ("bathrooms", "top"):
-        df = df.withColumn(c, col(c).cast("int"))
-    return df
+    df = normalize_missing_strings(df.drop(*_DROP_COLS))
+    return df.withColumns({c: col(c).cast("int") for c in ("bathrooms", "top")})

@@ -2,13 +2,23 @@
 
 The reference ships these as Spark-written parquet under
 ``/root/reference/data/`` (SURVEY.md §1.4); values transcribed in
-FIXTURES.md §4. They are tiny (28/81/28/57 rows) — always broadcast in
+FIXTURES.md §4. They are tiny (28/81/28/7 rows) — always broadcast in
 joins (historical_data_transformation.py:56-57).
+
+Each frame is built from a ``pyarrow.Table`` carrying the declared
+``*_SCHEMA`` (nullability included), so it plans as a JVM-side
+``LocalRelation``: broadcasting it never starts a Python worker, with
+or without the Arrow conf. A list of tuples would instead plan as a
+parallelized RDD of pickled rows, and every broadcast of it would run
+Python tasks.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .schemas import (
     AGENCY_SCHEMA,
@@ -133,20 +143,27 @@ AGENCY_ROWS: list[tuple[str, str]] = [
 ]
 
 
+def _local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def town_district(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOWN_DISTRICT_ROWS, TOWN_DISTRICT_SCHEMA)
+    return _local_relation(spark, TOWN_DISTRICT_ROWS, TOWN_DISTRICT_SCHEMA)
 
 
 def district_region(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DISTRICT_REGION_ROWS, DISTRICT_REGION_SCHEMA)
+    return _local_relation(spark, DISTRICT_REGION_ROWS, DISTRICT_REGION_SCHEMA)
 
 
 def district_code(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DISTRICT_CODE_ROWS, DISTRICT_CODE_SCHEMA)
+    return _local_relation(spark, DISTRICT_CODE_ROWS, DISTRICT_CODE_SCHEMA)
 
 
 def agency(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(AGENCY_ROWS, AGENCY_SCHEMA)
+    return _local_relation(spark, AGENCY_ROWS, AGENCY_SCHEMA)
 
 
 def write_seed_parquet(spark: SparkSession, out_dir: str) -> None:

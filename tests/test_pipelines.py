@@ -245,3 +245,44 @@ def test_run_all_load_metrics(spark, tmp_path):
     assert s["null_location"] == 0
     assert s["null_price"] == 0
     assert s["min_date"] == s["max_date"] == str(AS_OF)
+
+
+@pytest.mark.core
+def test_run_all_jobs_carry_branch_tags(spark, tmp_path):
+    """Every Spark job of a run_all day carries its branch's job tag in
+    the status store, and neither tag outlives the call on the caller
+    thread (concurrent=False runs both branches there)."""
+    from hdb_resale_price_data_pipeline_spark.plans.runner import (
+        HISTORICAL_TAG,
+        SCRAPED_TAG,
+        run_all,
+    )
+
+    csv_dir = fixtures.write_historical_csvs(str(tmp_path))
+    propnex_json, srx_json = fixtures.write_listing_jsons(str(tmp_path))
+    jsc = spark.sparkContext._jsc.sc()
+    store = jsc.statusStore()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return jobs, [jobs.apply(k).jobId() for k in range(jobs.size())]
+
+    for concurrent in (True, False):
+        last = max(job_ids()[1], default=-1)
+        run_all(
+            spark, csv_dir, propnex_json, srx_json, str(tmp_path / "warehouse"),
+            as_of=AS_OF, concurrent=concurrent,
+        )
+        jobs, ids = job_ids()
+        found = []
+        for k in (k for k, jid in enumerate(ids) if jid > last):
+            tags = jobs.apply(k).jobTags()
+            # a session tag reaches the job as '<session/thread prefix>-<tag>'
+            found.append({
+                b for i in range(tags.size()) for b in (HISTORICAL_TAG, SCRAPED_TAG)
+                if tags.apply(i).endswith("-" + b)
+            })
+        assert found and all(len(b) == 1 for b in found), found
+        assert set().union(*found) == {HISTORICAL_TAG, SCRAPED_TAG}
+        assert spark.getTags() == set()

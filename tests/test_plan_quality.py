@@ -139,6 +139,61 @@ def test_scraped_pipelines_are_shuffle_free(spark):
     assert _shuffles(_plan(merged)) == 1
 
 
+def test_run_all_plans_stay_on_the_jvm(spark, tmp_path):
+    """run_all-shaped plans (raw CSV/JSON through the three transforms and
+    the merge, with the in-repo seeds) never leave the JVM: no scan of a
+    Python-built RDD (the seeds are LocalRelations) and no Python UDF
+    node. A broadcast of a pickled-RDD seed starts Python workers on
+    every run."""
+    import datetime
+
+    import fixtures
+    from hdb_resale_price_data_pipeline_spark import seeds
+    from hdb_resale_price_data_pipeline_spark.plans import (
+        historical_pipeline,
+        merge_dedup_pipeline,
+        propnex_pipeline,
+        srx_pipeline,
+    )
+    from hdb_resale_price_data_pipeline_spark.schemas import (
+        RAW_PROPNEX_SCHEMA,
+        RAW_SRX_SCHEMA,
+    )
+    from hdb_resale_price_data_pipeline_spark.sources.readers import (
+        read_historical_csv_dir,
+        read_listing_json,
+    )
+
+    csv_dir = fixtures.write_historical_csvs(str(tmp_path))
+    propnex_json, srx_json = fixtures.write_listing_jsons(str(tmp_path))
+    district_code, district_region = seeds.district_code(spark), seeds.district_region(spark)
+    historical = historical_pipeline(
+        read_historical_csv_dir(spark, csv_dir),
+        seeds.town_district(spark),
+        district_code,
+        district_region,
+    )
+    p = propnex_pipeline(
+        read_listing_json(spark, propnex_json, RAW_PROPNEX_SCHEMA),
+        district_code,
+        district_region,
+        2024,
+    )
+    s = srx_pipeline(
+        read_listing_json(spark, srx_json, RAW_SRX_SCHEMA),
+        district_code,
+        district_region,
+        seeds.agency(spark),
+        2024,
+    )
+    merged = merge_dedup_pipeline(p, s, datetime.date(2024, 11, 1))
+    for df in (historical, merged):
+        plan = _plan(df)
+        assert plan.count("BroadcastHashJoin") >= 3
+        assert "ExistingRDD" not in plan, plan
+        assert "EvalPython" not in plan, plan
+
+
 def test_topk_avoids_global_sort(spark):
     """LIMIT after ORDER BY must plan as TakeOrderedAndProject, not a
     full global sort."""

@@ -3,6 +3,7 @@ batch twins where windows are finalized (watermark semantics)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import TEST_SF_DIR, SMOKE_SF_DIR
